@@ -1,17 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone proof that `spark.sql.extensions=graft.GraftExtensions` wires
   * vec_dot into a fresh session for pure-SQL users (run via tools/run.sh —
   * needs its own JVM because extensions apply at session creation).
   */
 object ExtensionsDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = GraftSession.builder(2)
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val row = spark.sql(

@@ -3,10 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Diagnostic main: dump `explain("formatted")` for the headline queries to
-  * stdout (tools/run.sh graft.PlanDump [sfDir] > PLANS.md). These are the
-  * plans the scale arguments in README/SURVEY rest on — regenerate after
-  * any operator change.
+/** Diagnostic main: dump `explain("formatted")` plans to stdout.
+  *
+  *   tools/run.sh graft.PlanDump [sfDir] > PLANS.md   headline queries
+  *   tools/run.sh graft.PlanDump <sfDir> key1 key2 ...  just those keys
+  *
+  * The headline plans are the ones the scale arguments in README/SURVEY
+  * rest on — regenerate PLANS.md after any operator change.
   */
 object PlanDump {
   private val keys: Seq[(String, String)] = Seq(
@@ -77,7 +80,7 @@ object PlanDump {
     "agg_kmv_distinct" ->
       "codegen'd md5fold48 hash, TopKPerKey bottom-k heaps per type, TakeOrdered union merge",
     "ml_ndcg_at_k" ->
-      "twin TopKPerKey heaps (score-ranked and relevance-ranked) over one checkpointed scored relation",
+      "twin TopKPerKey heaps (score-ranked and relevance-ranked), each over the map-only scored scan, lang exchanges reused at runtime",
     "sim_prefix_filter_join" ->
       "PPJoin: df-ordered prefixes + length filter in the join condition + positional ubound aggregate -- candidates pruned before the exact verify",
     "mm_audio_energy" ->
@@ -95,7 +98,7 @@ object PlanDump {
     "graph_hits" ->
       "two integer mutual-reinforcement rounds: per-side edge-key shuffle + map-side-combined sums, 1-row broadcast renorm scalars",
     "ml_gain_lift_deciles" ->
-      "gains deciles from the histogram: checkpointed score histogram, boundary window over <=11 rows, no corpus NTILE sort",
+      "gains deciles from the histogram: one score histogram feeds the totals and the boundary window over <=11 rows, no corpus NTILE sort",
     "scan_jdbc_pushdown" ->
       "JDBCRelation scan: both predicates compiled into the remote WHERE (PushedFilters) + numPartitions=4 range split -- the DB filters, the network carries survivors",
     "sink_jdbc_predictions" ->
@@ -135,26 +138,30 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SpillDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.length > 1) args.drop(1).foreach(k => printPlan(spark, sfDir, k))
+    else headlines(spark, sfDir)
+    spark.stop()
+  }
+
+  private def printPlan(
+      spark: SparkSession, sfDir: String, k: String, note: String = ""): Unit = {
+    println(s"\n## $k\n")
+    if (note.nonEmpty) println(s"_${note}_\n")
+    println("```")
+    println(ops.Registry.queries(k)(spark, sfDir)
+      .queryExecution.explainString(FormattedMode).trim)
+    println("```")
+  }
+
+  private def headlines(spark: SparkSession, sfDir: String): Unit = {
     println("# PLANS -- explain(\"formatted\") of the headline queries")
     println()
     println(s"Generated by `tools/run.sh graft.PlanDump $sfDir` -- the physical")
     println("plans the scale arguments in README/SURVEY rest on. PlanShapeSpec")
     println("asserts the load-bearing properties so they cannot silently rot.")
-    for ((k, note) <- keys) {
-      println(s"\n## $k\n")
-      println(s"_${note}_\n")
-      println("```")
-      println(ops.Registry.queries(k)(spark, sfDir)
-        .queryExecution.explainString(FormattedMode).trim)
-      println("```")
-    }
+    for ((k, note) <- keys) printPlan(spark, sfDir, k, note)
 
     // serve_more_like_this's FIRST index hop: the registered key's dumped
     // plan above is the candidates leg only — the dfreq leg runs eagerly
@@ -257,6 +264,5 @@ object PlanDump {
         println("```")
       } finally saved.foreach { case (k, v) => v.fold(c.unset(k))(c.set(k, _)) }
     }
-    spark.stop()
   }
 }

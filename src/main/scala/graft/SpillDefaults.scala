@@ -2,15 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Spill-encoding defaults, measured in the round-14 graph-tier decade runs
-  * (BASELINE.md): `zstd` shuffle/spill blocks + compressed RDD/checkpoint
-  * blocks collapse the iterative Pregel keys' per-round spill from a 60 GB
-  * ENOSPC peak to 8.7–17.2 GB at sf100 (~7×, 8–16 bytes/edge — edge-linear,
-  * ~9–17 MB/executor on a 1000-executor target). Harness-wide default since
-  * round 15: applied by every session builder (Verify/Bench/PlanDump/tests)
-  * and mirrored as -D flags in tools/run.sh + build.sbt fork options +
-  * Bench's re-exec, so decade sweeps and the driver's own bench inherit it
-  * no matter the entry path. RegistrySpec pins the live session values.
+/** Spill-encoding defaults: `zstd` shuffle/spill blocks plus compressed RDD
+  * and checkpoint blocks. On the iterative Pregel keys at sf100 they shrink
+  * per-round spill about 7× (8–16 bytes/edge; BASELINE.md). Every graft
+  * session gets them through [[GraftSession.builder]]; RegistrySpec pins
+  * the live session and context values.
   */
 object SpillDefaults {
   val configs: Seq[(String, String)] = Seq(
@@ -18,24 +14,10 @@ object SpillDefaults {
     "spark.rdd.compress"         -> "true",
     "spark.checkpoint.compress"  -> "true",
     // the 32 KB default buffer makes every small block pay zstd stream
-    // setup: measured +19% on the full sf0.1 bench (8 keys regressed ≥2×,
-    // checkpoint-heavy ones worst). 512 KB amortizes it to noise-level at
-    // bench scale (A/B matrix in BASELINE.md round-15) and, if anything,
-    // IMPROVES the decade-spill ratio (larger window); per-stream memory
-    // at 512 KB × concurrent streams is MBs/executor — standard practice.
+    // setup (measured +19% on the full sf0.1 bench); 512 KB amortizes it
+    // to noise at bench scale, at a few MB per executor
     "spark.io.compression.zstd.bufferSize" -> "512k")
 
-  /** GRAFT_SPILL_DEFAULTS=0 disables the recipe for A/B codec measurement
-    * (how the r15 bench isolated the codec's own cost); never set by the
-    * driver, so the default path is always the recipe. Honored by every
-    * session builder, tools/run.sh, and Bench's code-cache re-exec — but
-    * NOT by the sbt path: build.sbt's fork javaOptions hard-code the four
-    * -Dspark.* flags, which SparkConf reads regardless of this method
-    * skipping .config. A/B "off" runs must go through tools/run.sh or a
-    * bare java -cp, never `sbt run`/`sbt test` (where RegistrySpec's
-    * session pin would also fail with the switch set, by design).
-    */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
-    if (sys.env.get("GRAFT_SPILL_DEFAULTS").contains("0")) b
-    else configs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    configs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 }

@@ -1132,10 +1132,10 @@ object MLPipeline {
     * NDCG = DCG over the ranker's top-10 ÷ DCG over the ideal
     * (relevance-ordered) top-10, per lang. BOTH top-10s run on the custom
     * TopKPerKey operator — ranking eval never sorts the corpus, it keeps
-    * a 10-row heap per language — over the once-scanned, checkpointed
-    * scored relation; the gain/discount terms ((2^rel−1)/log2(rank+1))
-    * ride the ≤10·|langs| heap output through the DECIMAL(18,12)-sum +
-    * round-6 discipline. IDCG NULLIF-guarded (an all-irrelevant segment
+    * a 10-row heap per language — each over the map-only scored scan,
+    * their lang exchanges reused at runtime; the gain/discount terms
+    * ((2^rel−1)/log2(rank+1)) ride the ≤10·|langs| heap output through
+    * the DECIMAL(18,12)-sum + round-6 discipline. IDCG NULLIF-guarded (an all-irrelevant segment
     * yields NULL, not a crash).
     */
   private val mlNdcgAtK = Op(
@@ -1510,9 +1510,9 @@ object MLPipeline {
     * division, so the apportionment is deterministic integer math in both
     * engines and telescopes to exactly P at b_10 (how grouped gains charts
     * are defined when ties span boundaries; a per-row NTILE would need a
-    * corpus-wide SinglePartition sort). The histogram is checkpointed once
-    * because it feeds both the totals scalar and the boundary window; all
-    * windows run over ≤ max(|scores|, 11) rows. Long math holds to ~9e12
+    * corpus-wide SinglePartition sort). The histogram feeds both the
+    * totals scalar and the boundary window, which share its exchange at
+    * runtime; all windows run over ≤ max(|scores|, 11) rows. Long math holds to ~9e12
     * docs (P·1e6 < 2^63).
     */
   private val mlGainLiftDeciles = Op(

@@ -13,17 +13,13 @@ final case class Op(
     oracle: Option[String])
 
 object Registry {
-  /** Cache-lifetime contract (r19, ADVICE r18): several ops leave LAZY
-    * `persist()` blocks behind after their action completes (the graph
-    * tier's edge caches, dedup_cc/sem_dedup's docs cache, …) — they are
-    * deliberately NOT unpersisted inside the op, because an in-op
-    * blocking unpersist re-introduces the per-query driver stall the r18
-    * conversions removed. Bench and Verify sweep ALL persistent RDDs and
-    * the SQL cache between keys (`sweepJvmState`); any OTHER embedder
-    * that runs these queries in sequence must do the same
-    * (`spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true));
-    * spark.catalog.clearCache()`) or cache blocks accumulate across
-    * queries.
+  /** Cache-lifetime contract: several ops leave LAZY `persist()` blocks
+    * behind after their action completes (the graph tier's edge caches,
+    * dedup_cc/sem_dedup's docs cache, …) — they are deliberately NOT
+    * unpersisted inside the op, because an in-op blocking unpersist puts
+    * a driver stall into every query. Any caller that runs these queries
+    * in sequence must call [[graft.GraftSession.sweep]] between them, as
+    * Bench and Verify do, or cache blocks accumulate across queries.
     */
   lazy val all: Vector[Op] =
     Scans.ops ++ Filters.ops ++ Joins.ops ++ Aggs.ops ++ Windows.ops ++

@@ -21,11 +21,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val prev = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.builder(4)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try f(s)

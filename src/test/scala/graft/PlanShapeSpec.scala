@@ -16,7 +16,7 @@ class PlanShapeSpec extends AnyFunSuite {
     * sim_containment_pairs) run those eager Spark jobs during plan
     * construction and may leave checkpoint blocks persisted for the
     * session — acceptable in a test JVM; Verify/Bench free them via
-    * GraftBridge/sweepJvmState.
+    * GraftSession.sweep.
     */
   private def plan(name: String): String =
     Registry.queries(name)(spark, sf).queryExecution.executedPlan.toString
@@ -772,7 +772,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = plan("agg_kmv_distinct")
     assert(p.contains("TopKPerKey "), s"custom strategy did not plan the node: $p")
     val scans = p.linesIterator.count(_.contains("Scan parquet"))
-    assert(scans >= 1 && scans <= 4,
+    // one per pairs consumer: two TopKPerKey legs and two exact counts
+    assert(scans == 4,
       s"pair consumers must re-state the shared distinct, not checkpoint ($scans): $p")
   }
 

@@ -84,10 +84,32 @@ class RegistrySpec extends AnyFunSuite {
 
   test("zstd spill-encoding defaults are live in the session (r14 recipe is harness default)") {
     // BASELINE.md round-14: zstd spill blocks turn the graph tier's 60 GB
-    // sf100 ENOSPC into an 8.7–17.2 GB peak. SpillDefaults applies the
-    // recipe in every builder; this pin fails if a builder drops it.
-    for ((k, v) <- SpillDefaults.configs)
+    // sf100 ENOSPC into an 8.7–17.2 GB peak. GraftSession.builder applies
+    // the recipe; the block manager reads it from the context's SparkConf,
+    // which no -D flag fills, so pin both.
+    for ((k, v) <- SpillDefaults.configs) {
       assert(spark.conf.get(k) == v, s"$k != $v in the live session")
+      assert(spark.sparkContext.getConf.get(k) == v, s"$k != $v in the SparkContext conf")
+    }
+  }
+
+  test("GraftSession.sweep frees checkpointed and cached frames") {
+    import org.apache.spark.storage.StorageLevel
+    val checkpointed = spark.range(100).toDF("id").localCheckpoint(true)
+    val cached = spark.range(100).toDF("id").cache()
+    assert(cached.count() == 100)
+    // the checkpoint's blocks live in the RDD under its LogicalRDD leaf,
+    // which the SQL cache never sees
+    val ckptIds = checkpointed.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(ckptIds.nonEmpty && ckptIds.forall(spark.sparkContext.getPersistentRDDs.contains))
+    assert(cached.storageLevel != StorageLevel.NONE)
+    GraftSession.sweep(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"persistent RDDs survived the sweep: ${spark.sparkContext.getPersistentRDDs}")
+    assert(cached.storageLevel == StorageLevel.NONE)
+    assert(checkpointed.storageLevel == StorageLevel.NONE)
   }
 
   test("entry returns rows on sf0.001 (t1 smoke)") {

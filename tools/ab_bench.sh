@@ -16,11 +16,15 @@ for i in $(seq 1 "$N"); do
     "$REPO/tools/run.sh" graft.Bench "$@" 2>/dev/null \
     | grep '"queries"' >> "/tmp/ab/${LABEL}.jsonl" || echo "RUN $i FAILED" >&2
 done
-python3 - "$LABEL" <<'EOF'
+python3 - "$LABEL" "$N" <<'EOF'
 import json, sys
-lab = sys.argv[1]
+lab, n = sys.argv[1], int(sys.argv[2])
 runs = [json.loads(l) for l in open(f"/tmp/ab/{lab}.jsonl") if l.strip()]
-keys = list(runs[0]["queries"]) if runs else []
+# a failed key reads 0.0, which the min-merge would take as the fastest time
+failed = sorted({k for r in runs for k in r["failures"]})
+if failed or len(runs) < n:
+    sys.exit(f"== {lab}: {len(runs)}/{n} runs parsed; failed keys: {', '.join(failed) or 'none'}")
+keys = list(runs[0]["queries"])
 mins = {k: min(r["queries"][k] for r in runs) for k in keys}
 print(f"== {lab}: {len(runs)} runs, min-merged ==")
 for k in keys: print(f"  {k}: {mins[k]:.3f}  (" + ", ".join(f"{r['queries'][k]:.2f}" for r in runs) + ")")

@@ -2,24 +2,17 @@
 # Run a graft main class directly on the compiled classes (fast path, no sbt).
 # Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/vout
 #        SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Bench
+# Spark settings come from graft.GraftSession; the Spark jar directory and the
+# --add-opens packages are build.sbt's unmanagedBase and jdk17AddOpens.
 set -e
 CLS="$1"; shift
-# zstd spill-encoding defaults (see graft.SpillDefaults); GRAFT_SPILL_DEFAULTS=0
-# disables for A/B codec measurement only
-SPILL_FLAGS="-Dspark.io.compression.codec=zstd -Dspark.rdd.compress=true -Dspark.checkpoint.compress=true -Dspark.io.compression.zstd.bufferSize=512k"
-if [ "${GRAFT_SPILL_DEFAULTS:-1}" = "0" ]; then SPILL_FLAGS=""; fi
-OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  OPENS="$OPENS --add-opens $p=ALL-UNNAMED"
-done
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+JARS=$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")
+OPENS=$(tr '\n' ' ' < "$ROOT/build.sbt" \
+  | sed 's/.*val jdk17AddOpens = Seq(\([^)]*\)).*/\1/' \
+  | grep -o '"[^"]*"' | tr -d '"' | sed 's/.*/--add-opens &=ALL-UNNAMED/')
 exec java $OPENS \
   -XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  ${SPILL_FLAGS} \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes:/root/repo/target/scala-2.13/test-classes}:/opt/spark/jars/*" \
+  -cp "${GRAFT_CLASSES:-$ROOT/target/scala-2.13/classes:$ROOT/target/scala-2.13/test-classes}:$JARS/*" \
   "$CLS" "$@"
